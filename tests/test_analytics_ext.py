@@ -610,6 +610,40 @@ def test_persisted_index_self_heals_partial_dir(spark, sf_dir):
     assert not [d for d in os.listdir(_PQ_INDEX_ROOT) if ".tmp-" in d]
 
 
+def test_index_build_sweeps_dead_builds(spark, sf_dir):
+    """A build killed before its publish leaves an ``<idx>.tmp-<pid>-*``
+    dir behind. The next build removes it once that pid is dead, and
+    keeps a live pid's dir, which may be a concurrent build."""
+    import hashlib
+    import os
+    import shutil
+    import subprocess
+
+    from warpdb_spark.inventory.analytics_ext import (
+        _PQ_INDEX_ROOT,
+        similarity_pq_persisted_index,
+    )
+
+    key = f"{sf_dir.rstrip('/')}|m16|c32|s42|iters0|v1"
+    idx = os.path.join(_PQ_INDEX_ROOT, hashlib.md5(key.encode()).hexdigest()[:12])
+    gone = subprocess.Popen(["true"])
+    gone.wait()
+    dead = f"{idx}.tmp-{gone.pid}-deadbeef"
+    live = f"{idx}.tmp-{os.getpid()}-a11ve000"
+    for d in (dead, live):
+        os.makedirs(os.path.join(d, "codes.parquet"), exist_ok=True)
+    try:
+        # a missing table makes the next call rebuild
+        shutil.rmtree(os.path.join(idx, "codebooks.parquet"), ignore_errors=True)
+        similarity_pq_persisted_index(spark, sf_dir).collect()
+        assert os.path.exists(os.path.join(idx, "codebooks.parquet", "_SUCCESS"))
+        assert not os.path.exists(dead)
+        assert os.path.isdir(live)
+    finally:
+        shutil.rmtree(dead, ignore_errors=True)
+        shutil.rmtree(live, ignore_errors=True)
+
+
 def test_refresh_delta_encode_pushes_cutoff_to_scan(spark, sf_dir):
     """The O(new rows) refresh claim holds only if the delta encode's
     embeddings scan pushes vec_id >= cutoff down to parquet."""

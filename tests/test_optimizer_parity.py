@@ -30,7 +30,9 @@ class TestConstantConditions:
     def test_always_true_condition_dropped(self, spark, fixture_csv):
         db = WarpDB(fixture_csv, spark=spark, table_name="test")
         df = db.query("price WHERE 1 < 2")
-        assert "Filter" not in _optimized(df)
+        # the cached CSV snapshot prints its scan (DataFilters: [], ...)
+        # after InMemoryRelation; only operators above it are the query's
+        assert "Filter" not in _optimized(df).split("InMemoryRelation")[0]
         assert df.count() == 4
 
 

@@ -414,3 +414,68 @@ class TestCompaction:
         spans.sort()
         for (_lo1, hi1), (lo2, _hi2) in zip(spans, spans[1:]):
             assert hi1 < lo2  # compaction restored disjoint clustering
+
+
+class TestCsvHeaderRead:
+    """A single uncompressed CSV's header is read straight from the file
+    (no Spark job); it must name the same columns as Spark's text probe,
+    which stays the path for directories and globs."""
+
+    FILES = {
+        "plain.csv": (b"price,quantity\n10.5,3\n", ","),
+        "tabs.tsv": (b"price\tquantity\n10.5\t3\n", "\t"),
+        "crlf.csv": (b"price, quantity\r\n10.5,3\r\n", ","),
+        "cr.csv": (b"price,quantity\r10.5,3\r", ","),
+        "bom.csv": (b"\xef\xbb\xbfprice,quantity\n10.5,3\n", ","),
+        "no_newline.csv": (b"price,quantity", ","),
+    }
+
+    @pytest.fixture(scope="class")
+    def csv_dir(self, tmp_path_factory):
+        d = tmp_path_factory.mktemp("headers")
+        for name, (data, _) in self.FILES.items():
+            (d / name).write_bytes(data)
+        parts = d / "parts"
+        parts.mkdir()
+        (parts / "p0.csv").write_text("price,quantity\n10.5,3\n")
+        (parts / "p1.csv").write_text("price,quantity\n20.0,4\n")
+        (d / "empty.csv").write_bytes(b"")
+        (d / "_hidden.csv").write_text("price,quantity\n10.5,3\n")
+        return d
+
+    @pytest.mark.parametrize("name", sorted(FILES))
+    def test_file_header_matches_spark_probe(self, spark, csv_dir, name):
+        from warpdb_spark.sources.readers import _csv_header_columns, _file_head, _spark_head
+
+        path = str(csv_dir / name)
+        sep = self.FILES[name][1]
+        assert _file_head(path) == _spark_head(spark, path)
+        sc = spark.sparkContext
+        sc.setJobGroup("header-read", "header read")
+        try:
+            cols = _csv_header_columns(spark, path, sep)
+        finally:
+            sc.setJobGroup(None, None)
+        assert cols == ["price", "quantity"]
+        assert list(sc.statusTracker().getJobIdsForGroup("header-read")) == []
+
+    def test_directory_keeps_spark_probe(self, spark, csv_dir):
+        from warpdb_spark.sources.readers import _csv_header_columns, _file_head
+
+        path = str(csv_dir / "parts")
+        assert _file_head(path) is None
+        assert _csv_header_columns(spark, path) == ["price", "quantity"]
+        assert load_table(spark, path, fmt="csv").count() == 2
+
+    def test_empty_file_error_unchanged(self, spark, csv_dir):
+        from warpdb_spark.sources.readers import _csv_header_columns, _file_head, _spark_head
+
+        path = str(csv_dir / "empty.csv")
+        assert _file_head(path) == _spark_head(spark, path) == []
+        with pytest.raises(ValueError, match="Empty CSV file"):
+            _csv_header_columns(spark, path)
+        # Spark skips a hidden file even when it is named directly
+        hidden = str(csv_dir / "_hidden.csv")
+        assert _file_head(hidden) is None and _spark_head(spark, hidden) == []
+        with pytest.raises(ValueError, match="Empty CSV file"):
+            _csv_header_columns(spark, hidden)

@@ -246,3 +246,104 @@ class TestProfile:
         # depths describe a tree: root at 0, monotone growth down paths
         assert prof[0]["depth"] == 0
         assert all(r["depth"] >= 0 for r in prof)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _persisted(df) -> bool:
+    # storageLevel asks the cache manager (is_cached is a Python flag)
+    return df.storageLevel.useMemory
+
+
+class TestResidentSnapshot:
+    """Row-text tables are tokenized once, by the handle's first query,
+    into Spark's columnar cache (the reference keeps loaded columns on
+    the GPU, include/csv_loader.hpp:15-20); every other source stays a
+    lazy scan."""
+
+    def test_csv_query_reads_in_memory_relation(self, spark, fixture_csv):
+        with WarpDB(fixture_csv, spark=spark, table_name="test") as db:
+            assert _persisted(db.df)
+            assert sorted(vals(db.query("price"))) == [10.5, 15.25, 20.0, 30.0]
+            plan = _plan(db.query_sql("SELECT price FROM test WHERE quantity > 2"))
+            assert "InMemoryRelation" in plan, plan
+
+    def test_json_handle_is_resident(self, spark, fixture_json):
+        with WarpDB(fixture_json, spark=spark, table_name="test") as db:
+            assert db.query("price + 1").count() == 4
+            assert "InMemoryRelation" in _plan(db.query("price"))
+
+    def test_rewritten_csv_old_handle_keeps_snapshot(self, spark, tmp_path):
+        p = tmp_path / "grow.csv"
+        p.write_text("price,quantity\n1.0,1\n2.0,2\n")
+        old = WarpDB(str(p), spark=spark)
+        assert sorted(vals(old.query("price"))) == [1.0, 2.0]
+        p.write_text("price,quantity\n1.0,1\n2.0,2\n3.0,3\n")
+        new = WarpDB(str(p), spark=spark)
+        try:
+            assert sorted(vals(old.query("price"))) == [1.0, 2.0]
+            assert sorted(vals(new.query("price"))) == [1.0, 2.0, 3.0]
+            # a new snapshot under an existing name sees the file too
+            old.attach("t", str(p))
+            assert sorted(vals(old.query("price"))) == [1.0, 2.0, 3.0]
+        finally:
+            old.close()
+            new.close()
+
+    def test_parquet_handle_stays_lazy(self, spark, sf_dir):
+        db = WarpDB(f"{sf_dir}/orders.parquet", spark=spark, table_name="orders")
+        df = db.query_sql("SELECT o_orderkey FROM orders WHERE o_orderkey < 10")
+        df.collect()
+        assert not _persisted(db.df)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryRelation" not in plan and "PushedFilters" in plan
+
+    def test_query_csv_stays_lazy(self, spark, fixture_csv):
+        df = WarpDB.query_csv(fixture_csv, "price WHERE price > 12", spark=spark)
+        assert sorted(vals(df)) == [15.25, 20.0, 30.0]
+        assert "InMemoryRelation" not in _plan(df)
+
+    def test_caller_dataframes_are_never_persisted(self, spark):
+        src = spark.createDataFrame([(1.0, 2)], "price double, quantity int")
+        other = spark.createDataFrame([(3,)], "k int")
+        db = WarpDB(df=src, spark=spark).attach("o", other)
+        db.query("price").collect()
+        db.query_sql("SELECT k FROM o").collect()
+        assert not _persisted(src) and not _persisted(other)
+
+    def test_close_releases_only_own_snapshots(self, spark, fixture_csv, extended_csv):
+        caller = spark.createDataFrame([(1,)], "k int").persist()
+        db = WarpDB(fixture_csv, spark=spark).attach("ext", extended_csv).attach("c", caller)
+        own, ext = db.df, db.tables["ext"]
+        db.query("price").collect()
+        assert _persisted(own) and _persisted(ext)
+        db.close()
+        assert not _persisted(own) and not _persisted(ext)
+        assert _persisted(caller)
+        assert sorted(vals(db.query("price"))) == [10.5, 15.25, 20.0, 30.0]
+        caller.unpersist()
+
+    def test_context_manager_releases(self, spark, fixture_csv):
+        with WarpDB(fixture_csv, spark=spark) as db:
+            db.query("price").collect()
+            own = db.df
+            assert _persisted(own)
+        assert not _persisted(own)
+
+    def test_attach_replacement_releases_old_snapshot(self, spark, fixture_csv, extended_csv):
+        db = WarpDB(fixture_csv, spark=spark, table_name="a").attach("b", extended_csv)
+        first_b = db.tables["b"]
+        db.attach("b", extended_csv)
+        second_b = db.tables["b"]
+        assert not _persisted(first_b) and _persisted(second_b)
+        caller = spark.createDataFrame([(1,)], "k int")
+        db.attach("b", caller)
+        assert not _persisted(second_b)
+        # a snapshot still attached under another name is kept
+        db.attach("alias", db.df)
+        db.attach("a", caller)
+        assert _persisted(db.tables["alias"])
+        db.close()
+        assert not _persisted(db.tables["alias"])

@@ -25,9 +25,13 @@ def main(argv: list[str] | None = None) -> int:
 
     from warpdb_spark.api import WarpDB
     from warpdb_spark.errors import WarpDBError
+    from warpdb_spark.session import get_spark
+    from warpdb_spark.sources.readers import load_table
 
     try:
-        db = WarpDB(args.data_file, table_name="t")
+        # one query per process: a lazy scan, no cached snapshot to fill
+        spark = get_spark()
+        db = WarpDB(df=load_table(spark, args.data_file), spark=spark, table_name="t")
         if args.sql:
             df = db.query_sql(args.query)
         else:

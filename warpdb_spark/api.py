@@ -4,6 +4,7 @@ bindings/python/pywarpdb.cpp:8-38) re-expressed on Spark.
 | Reference | Here |
 |---|---|
 | ``WarpDB(filepath, schema)`` | ``WarpDB(path, schema=..., spark=...)`` — extension-dispatch load |
+| columns resident on the GPU after load (include/csv_loader.hpp:15-20) | CSV/TSV/NDJSON tables cached per handle by the first query (load-time snapshot); ``close()`` releases them |
 | ``query("expr [WHERE cond]")`` | same mini-language → DataFrame (src/warpdb.cpp:199-257) |
 | ``query_sql("SELECT ...")`` | full dialect → DataFrame (src/warpdb.cpp:297-498) |
 | ``query_arrow(...)`` (Arrow C-Data / shm) | ``query_arrow`` → pyarrow.Table; ``query_to_shared`` → parquet at a shared path |
@@ -15,11 +16,24 @@ Deliberate supersets, pinned in tests: honest result types instead of
 the reference's everything-is-float32 (include/warpdb.hpp:19, SURVEY
 §1.2) with ``coerce_float32=True`` available for bit-parity; NULL
 semantics; multiple tables via ``attach``.
+
+Load-time snapshot: a row-text table (``.csv``, ``.tsv``, ``.json``,
+``.ndjson``, ``.jsonl``) is tokenized once, by the handle's first
+query, into Spark's MEMORY_AND_DISK columnar cache, and every later
+query reads that copy, as the reference reads its loaded GPU columns.
+Rewriting the file does not change what an open handle returns; a new
+handle (or ``attach`` under the same name) sees the new file.
+``close()``, leaving a ``with WarpDB(...)`` block, or replacing the
+name through ``attach`` releases the copy. Parquet, ORC and Arrow
+tables, caller-supplied DataFrames, ``query_csv`` and ``query_stream``
+stay lazy scans, so pushdown reaches the files.
 """
 
 from __future__ import annotations
 
+import os
 import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,11 +44,25 @@ from warpdb_spark.plans.builder import build_dataframe
 from warpdb_spark.plans.compiler import Compiler, validate
 from warpdb_spark.plans.parser import parse_expression, parse_query
 from warpdb_spark.session import get_spark
-from warpdb_spark.sources.readers import load_table
+from warpdb_spark.sources.readers import _DISPATCH, load_table
 
 # the reference splits on the WHERE substring case-insensitively
 # (src/warpdb.cpp:204-213); \b keeps identifiers like "nowhere" intact.
 _WHERE_SPLIT = re.compile(r"\bWHERE\b", re.IGNORECASE)
+
+# A reader option no data source reads. Spark's CacheManager matches a
+# cached plan by file path, so without a distinct value per load a later
+# handle over the same path would be served an earlier handle's
+# snapshot, even after the file was rewritten.
+_SNAPSHOT_OPTION = "warpdbSnapshot"
+
+
+def _is_row_text(path: str, fmt: str | None) -> bool:
+    """True for the formats ``load_table`` tokenizes from text (CSV and
+    JSON), whose every lazy scan re-parses the whole file."""
+    if fmt is None:
+        fmt = _DISPATCH.get(os.path.splitext(path.rstrip("/"))[1].lower())
+    return (fmt or "").lower() in ("csv", "json")
 
 
 class WarpDB:
@@ -50,10 +78,13 @@ class WarpDB:
         self.spark = spark or get_spark()
         self.registry: FunctionRegistry = default_registry()
         self.tables: dict[str, DataFrame] = {}
+        # the persisted snapshots this handle made; only these are ever
+        # unpersisted, never a caller's DataFrame
+        self._snapshots: list[DataFrame] = []
         if df is not None:
             self.tables[table_name] = df
         elif filepath is not None:
-            self.tables[table_name] = load_table(self.spark, filepath, schema=schema, **options)
+            self.tables[table_name] = self._load(filepath, schema, options)
         else:
             raise ValueError("WarpDB requires a filepath or a DataFrame")
         self.table_name = table_name
@@ -65,11 +96,41 @@ class WarpDB:
         return self.tables[self.table_name]
 
     def attach(self, name: str, source: str | DataFrame, schema=None, **options) -> "WarpDB":
-        if isinstance(source, DataFrame):
-            self.tables[name] = source
-        else:
-            self.tables[name] = load_table(self.spark, source, schema=schema, **options)
+        """Add a table, or replace one (releasing its snapshot)."""
+        df = source if isinstance(source, DataFrame) else self._load(source, schema, options)
+        old = self.tables.get(name)
+        self.tables[name] = df
+        if old is not None and all(t is not old for t in self.tables.values()):
+            self._release(old)
         return self
+
+    def _load(self, path: str, schema, options: dict) -> DataFrame:
+        if not _is_row_text(path, options.get("fmt")):
+            return load_table(self.spark, path, schema=schema, **options)
+        tagged = {**options, _SNAPSHOT_OPTION: uuid.uuid4().hex}
+        df = load_table(self.spark, path, schema=schema, **tagged).persist()
+        self._snapshots.append(df)
+        return df
+
+    def _release(self, df: DataFrame) -> None:
+        for i, own in enumerate(self._snapshots):
+            if own is df:
+                del self._snapshots[i]
+                df.unpersist()
+                return
+
+    def close(self) -> None:
+        """Release every snapshot this handle persisted. The handle
+        stays usable; later queries scan the files again."""
+        for df in self._snapshots:
+            df.unpersist()
+        self._snapshots.clear()
+
+    def __enter__(self) -> "WarpDB":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
     # -- UDF registry (custom.cu analog) --------------------------------
     def register_function(self, name: str, builder) -> "WarpDB":
@@ -305,6 +366,8 @@ class WarpDB:
         """``query_multi_gpu_csv`` analog (src/warpdb.cpp:544-590): the
         chunked out-of-core loop is Spark's partitioned file scan.
         ``rows_per_chunk`` is accepted for API parity; partition sizing
-        is governed by ``spark.sql.files.maxPartitionBytes``."""
-        db = cls(path, schema=schema, spark=spark)
+        is governed by ``spark.sql.files.maxPartitionBytes``. The scan
+        stays lazy: no snapshot is persisted."""
+        spark = spark or get_spark()
+        db = cls(df=load_table(spark, path, schema=schema), spark=spark)
         return db.query(expr)

@@ -791,6 +791,30 @@ _IVFPQ_RES_SQL = (
 _PQ_INDEX_ROOT = "/tmp/warpdb_spark_pq_index"
 
 
+def _sweep_dead_builds() -> None:
+    """Remove the ``<dir>.tmp-<pid>-*`` build dirs under the index root
+    (index dirs and the delta tables inside them) whose pid is no longer
+    alive. A build killed before its publish leaves its temp dir behind, and no
+    later build would otherwise delete it; a live pid's dir may be a
+    concurrent build in progress and is kept."""
+    import glob
+    import os
+    import re
+    import shutil
+
+    base = glob.escape(_PQ_INDEX_ROOT)
+    for tmp in glob.glob(f"{base}/*.tmp-*") + glob.glob(f"{base}/*/*.tmp-*"):
+        m = re.search(r"\.tmp-(\d+)-[^/]*$", tmp)
+        if m is None:
+            continue
+        try:
+            os.kill(int(m.group(1)), 0)
+        except ProcessLookupError:
+            shutil.rmtree(tmp, ignore_errors=True)
+        except OSError:  # EPERM: alive under another user
+            pass
+
+
 def _publish_atomic(tmp: str, dst: str, markers: list[str]) -> None:
     """Publish a built index dir with one atomic rename, SELF-HEALING a
     partial destination (r9 review finding: treating every rename
@@ -870,6 +894,7 @@ def similarity_pq_persisted_index(spark, sf_dir):
         # destination; a complete destination means a concurrent winner.
         import uuid
 
+        _sweep_dead_builds()
         tmp = f"{idx}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
         cb = S.pq_train(
             emb, m_subs=m_subs, n_codes=n_codes, train_iters=0, seed=42
@@ -939,6 +964,7 @@ def similarity_pq_index_refresh(spark, sf_dir):
         # published atomically (the persisted-index discipline)
         import uuid
 
+        _sweep_dead_builds()
         tmp = f"{idx}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
         base_emb = emb.filter(F.col("vec_id") < cutoff)
         cb = S.pq_train(base_emb, m_subs=m_subs, n_codes=n_codes,
@@ -963,6 +989,7 @@ def similarity_pq_index_refresh(spark, sf_dir):
         # codebook; one atomic publish of the delta, base untouched
         import uuid
 
+        _sweep_dead_builds()
         tmpd = f"{delta_path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
         S.pq_encode(emb.filter(F.col("vec_id") >= cutoff), cb).write.parquet(tmpd)
         _publish_atomic(tmpd, delta_path, ["_SUCCESS"])

@@ -14,7 +14,8 @@ Reference behavior being re-expressed (SURVEY §2.1):
 
 All readers return lazy DataFrames so Catalyst gets pushdown/pruning;
 nothing is materialized on the driver except the one-line CSV header
-probe (bounded, scale-safe).
+probe (bounded, scale-safe; read straight from the file where it is a
+single uncompressed file).
 """
 
 from __future__ import annotations
@@ -55,12 +56,63 @@ def _resolve_type(t) -> T.DataType:
         raise ValueError(f"Unknown schema type: {t!r}")
 
 
+# Hadoop picks a decompression codec by suffix; such files go to Spark.
+_CODEC_SUFFIXES = (".gz", ".bz2", ".deflate", ".lz4", ".snappy", ".zst", ".xz", ".br")
+
+
+def _spark_head(spark: SparkSession, path: str) -> list[str]:
+    """The first line Spark's text reader yields (limit(1) prunes the
+    scan), as a 0- or 1-item list."""
+    return [r[0] for r in spark.read.text(path).limit(1).collect()]
+
+
+def _file_head(path: str) -> list[str] | None:
+    """The first line of a single uncompressed file, read through
+    pyarrow's filesystem without a Spark job, as a 0- or 1-item list.
+    Lines end at ``\n``, ``\r`` or ``\r\n`` and a leading UTF-8 BOM is
+    dropped, as in Hadoop's line reader. None where only Spark's reader
+    applies: directories, globs, compressed files, hidden files (``_``
+    or ``.`` names, which Spark reads as empty even when named
+    directly), and anything pyarrow cannot open."""
+    name = os.path.basename(path.rstrip("/"))
+    if (
+        any(ch in path for ch in "*?[{")
+        or name.startswith(("_", "."))
+        or name.lower().endswith(_CODEC_SUFFIXES)
+    ):
+        return None
+    try:
+        from pyarrow import fs as pafs
+
+        fs, fs_path = _ipc_filesystem(path)
+        if fs.get_file_info(fs_path).type != pafs.FileType.File:
+            return None
+        head = b""
+        with fs.open_input_stream(fs_path) as f:
+            while not (b"\n" in head or b"\r" in head):
+                block = f.read(1 << 16)
+                if not block:
+                    break
+                head += block
+    except Exception:  # noqa: BLE001 — unknown scheme, no access: Spark decides
+        return None
+    if not head:
+        return []
+    head = head.removeprefix(b"\xef\xbb\xbf")
+    line = re.split(rb"\r|\n", head, maxsplit=1)[0]
+    return [line.decode("utf-8", errors="replace")]
+
+
 def _csv_header_columns(spark: SparkSession, path: str, sep: str = ",") -> list[str]:
-    """Read only the header line (distributed-safe: limit(1) prunes the scan)."""
-    first = spark.read.text(path).limit(1).collect()
-    if not first:
+    """Column names from the header line. A single local or URI file is
+    read directly (a Spark probe job costs ~0.1 s); directories, globs
+    and compressed files keep the Spark probe."""
+    head = _file_head(path)
+    if head is None:
+        head = _spark_head(spark, path)
+    if not head:
         raise ValueError(f"Empty CSV file: {path}")
-    return [c.strip() for c in first[0][0].split(sep)]
+    return [c.strip() for c in head[0].split(sep)]
 
 
 def read_csv(
