@@ -1,90 +1,47 @@
-"""Inventory loading contract: entry ordering for the driver's bounded
-correctness window, rotation-bookkeeping invariants (no dupes, pending
-always ahead of green), and loud failure when a submodule can't import
-(a silent except-ImportError previously made 34 entries vanish)."""
+"""Inventory loading contract: ``load_all()`` is a plain merge of the
+submodules in module order, a name defined twice (or an oracle without
+a query) fails loudly instead of being silently shadowed, and a
+submodule that can't import is loud too (a silent except-ImportError
+previously made 34 entries vanish)."""
 
 import sys
 
 import pytest
 
 from warpdb_spark import inventory
-from warpdb_spark.inventory import rotation
+from warpdb_spark.inventory import (
+    analytics_ext,
+    core_sql,
+    curation_ext,
+    pipeline_ops,
+    retrieval_ops,
+    scale_ops,
+    tpch_extra,
+)
+
+MODULE_ORDER = (core_sql, tpch_extra, pipeline_ops, analytics_ext, retrieval_ops,
+                scale_ops, curation_ext)
 
 
-def test_driver_priority_entries_come_first():
+def test_load_all_merges_modules_in_order():
     q, o = inventory.load_all()
-    names = list(q)
-    assert names[: len(inventory.DRIVER_PRIORITY)] == inventory.DRIVER_PRIORITY
-    # every priority name has a callable; oracle coverage stays declared
-    assert all(callable(q[n]) for n in names)
+    assert list(q) == [n for m in MODULE_ORDER for n in m.QUERIES]
+    assert all(callable(f) for f in q.values())
+    # oracle coverage stays declared
     assert set(o) <= set(q)
 
 
-def test_window_is_all_never_driver_checked():
-    """The driver verifies ~50 entries from the front: as long as any
-    entry lacks a driver-green row, the front of the emission order must
-    be exclusively such entries (pending-before-green)."""
-    q, _ = inventory.load_all()
-    names = list(q)
-    n_pending = len(rotation.PENDING_ORDER)
-    window = names[: min(50, n_pending)]
-    for name in window:
-        assert name not in rotation.DRIVER_GREEN, (
-            f"{name} already driver-green (r{rotation.DRIVER_GREEN.get(name)}) "
-            "but occupies a front-window slot"
-        )
-    # and nothing pending hides behind a green entry
-    first_green_idx = next(
-        (i for i, n in enumerate(names) if n in rotation.DRIVER_GREEN), len(names)
-    )
-    assert first_green_idx == n_pending
+def test_duplicate_name_across_modules_raises(monkeypatch):
+    """A name defined in two modules used to be shadowed by the later
+    module's callable (and oracle) without a word."""
+    name = next(iter(core_sql.QUERIES))
+    monkeypatch.setitem(curation_ext.QUERIES, name, core_sql.QUERIES[name])
+    with pytest.raises(RuntimeError, match=f"defined twice: {name} \\(core_sql, curation_ext\\)"):
+        inventory.load_all()
 
 
-def test_rotation_bookkeeping_invariants():
-    q, _ = inventory.load_all()
-    inv = set(q)
-    pending = rotation.PENDING_ORDER
-    green = rotation.DRIVER_GREEN
-    # no duplicates
-    assert len(set(pending)) == len(pending)
-    # disjoint: a green entry must not hog a pending slot
-    assert not (set(pending) & set(green))
-    # complete: every inventory entry is tracked exactly once
-    assert set(pending) | set(green) == inv
-    # rounds are sane
-    assert all(isinstance(r, int) and r >= 1 for r in green.values())
-
-
-def test_rotation_build_rejects_drift(monkeypatch):
-    q, _ = inventory.load_all()
-    names = list(q)
-    # duplicate pending name
-    monkeypatch.setattr(rotation, "PENDING_ORDER", ["dialect_setops", "dialect_setops"])
-    with pytest.raises(RuntimeError, match="duplicate"):
-        rotation.build_driver_priority(names)
-    # pending ∩ green
-    monkeypatch.setattr(rotation, "PENDING_ORDER", ["reshape_pivot"])
-    with pytest.raises(RuntimeError, match="both pending and green"):
-        rotation.build_driver_priority(names)
-    # untracked inventory entry
-    monkeypatch.setattr(rotation, "PENDING_ORDER", [])
-    monkeypatch.setattr(
-        rotation,
-        "DRIVER_GREEN",
-        {k: v for k, v in rotation.DRIVER_GREEN.items() if k != "reshape_pivot"},
-    )
-    with pytest.raises(RuntimeError, match="missing from rotation bookkeeping"):
-        rotation.build_driver_priority(names)
-    # unknown name
-    monkeypatch.setattr(rotation, "PENDING_ORDER", ["no_such_entry"])
-    with pytest.raises(RuntimeError, match="no_such_entry"):
-        rotation.build_driver_priority(names)
-
-
-def test_unknown_priority_name_raises(monkeypatch):
-    monkeypatch.setattr(
-        inventory, "DRIVER_PRIORITY", inventory.DRIVER_PRIORITY + ["no_such_entry"]
-    )
+def test_oracle_without_query_raises(monkeypatch):
+    monkeypatch.setitem(scale_ops.ORACLES, "no_such_entry", "SELECT 1")
     with pytest.raises(RuntimeError, match="no_such_entry"):
         inventory.load_all()
 
@@ -161,81 +118,6 @@ def test_submodule_import_failure_is_loud(monkeypatch):
     monkeypatch.setitem(sys.modules, "warpdb_spark.inventory.pipeline_ops", None)
     with pytest.raises(ImportError):
         inventory.load_all()
-
-
-def test_headline_has_no_window_sort_on_low_cardinality_key(spark, sf_dir):
-    """Ban the skewed-window scale-killer from the FROZEN bench suite:
-    a window (per-group sort) partitioned by a bounded-domain key puts
-    ~1/|domain| of the corpus in ONE task at 100 TB. Exact
-    order-statistic entries over such keys (agg_gini_by_segment,
-    window_distribution_functions, agg_weighted_median) are kept as
-    sf-bounded diagnostics with binned/approx scale siblings — they
-    must never join the headline set. Low-cardinality is measured from
-    the data (DuckDB distinct counts per column, ≤ 10 at any sf —
-    categorical domains don't grow with scale), and window partition
-    keys are read from the optimized plan's windowspecdefinition()
-    nodes, so the test catches a future headline addition, not just
-    today's list."""
-    import re
-
-    import duckdb
-
-    from bench import HEADLINE
-
-    tables = [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    con = duckdb.connect()
-    low_card: set[str] = set()
-    for t in tables:
-        rel = con.sql(f"SELECT * FROM '{sf_dir}/{t}.parquet' LIMIT 0")
-        for col, typ in zip(rel.columns, rel.types):
-            if str(typ).startswith(("BLOB", "STRUCT", "LIST", "FLOAT[]")):
-                continue
-            n = con.sql(
-                f'SELECT count(DISTINCT "{col}") FROM \'{sf_dir}/{t}.parquet\''
-            ).fetchone()[0]
-            if n <= 10:
-                low_card.add(col)
-    assert "o_orderpriority" in low_card and "l_orderkey" not in low_card
-
-    q, _ = inventory.load_all()
-    offenders = {}
-    try:
-        for name in HEADLINE:
-            if name not in q:
-                continue
-            plan = (
-                q[name](spark, sf_dir)
-                ._jdf.queryExecution().optimizedPlan().toString()
-            )
-            for spec in re.findall(r"windowspecdefinition\(([^)]*)", plan):
-                # args before the first "col ASC/DESC ..." token are the
-                # partition spec; strip the #exprId[type] suffix.
-                # FAIL CLOSED on anything unparseable: a partition key
-                # that is a nested EXPRESSION (contains "(") truncates
-                # the regex capture — treat it as an offender rather
-                # than silently passing the guard (r7 review: a
-                # low-cardinality key wrapped in pmod() would otherwise
-                # evade the ban this test exists to enforce)
-                part_cols = []
-                for arg in spec.split(", "):
-                    if " ASC" in arg or " DESC" in arg or "specifiedwindowframe" in arg:
-                        break
-                    part_cols.append(arg.split("#")[0])
-                bad = [c for c in part_cols if c in low_card]
-                bad += [
-                    f"unparseable-expression:{c}" for c in part_cols if "(" in c
-                ]
-                if bad:
-                    offenders.setdefault(name, []).extend(bad)
-    finally:
-        spark.catalog.clearCache()
-    assert not offenders, (
-        "headline queries window-partitioned on a bounded-domain key "
-        f"(one task holds ~1/|domain| of the corpus at 100 TB): {offenders}"
-    )
 
 
 @pytest.mark.slow
@@ -337,155 +219,6 @@ def test_chunk_column_name_minted_only_in_reviewed_files():
         "inventory/pipeline_ops.py",
         "operators/sequence.py",
     ], minters
-
-
-def test_green_recheck_order_is_changed_then_oldest_round_first():
-    """With the driver-green contract closed (262/262 in r7), window
-    re-check slots guard against regression AND stale evidence: the
-    green tail of the emission order must front every entry whose
-    source fingerprint drifted since its last green row (r8 verdict
-    defect #3 — a rewrite must not ship on old driver evidence), and
-    within each tier be non-decreasing in the round of the entry's
-    most recent green row, so the entries longest without a driver
-    check re-verify soonest."""
-    from warpdb_spark.inventory.fingerprint import changed_since_green
-    from warpdb_spark.inventory.fingerprints import GREEN_FINGERPRINTS
-
-    q, o = inventory.load_all()
-    names = list(q)
-    greens = [n for n in names if n in rotation.DRIVER_GREEN]
-    tail = [n for n in inventory.DRIVER_PRIORITY if n in rotation.DRIVER_GREEN]
-    assert sorted(tail) == sorted(greens)
-    changed = changed_since_green(q, o, GREEN_FINGERPRINTS)
-    keys = [(n not in changed, rotation.DRIVER_GREEN[n]) for n in tail]
-    assert keys == sorted(keys), (
-        "green re-checks not (changed-tier, oldest-last-green)-first"
-    )
-
-
-def test_fingerprints_are_deterministic_and_sensitive():
-    """entry_fingerprint must be stable across calls for an unchanged
-    tree (a flapping fingerprint would thrash the re-check queue) and
-    must react to BOTH sides of the driver's comparison: the Spark
-    callable's transitive source and the oracle SQL."""
-    from warpdb_spark.inventory.fingerprint import (
-        current_fingerprints,
-        entry_fingerprint,
-    )
-
-    q, o = inventory.load_all()
-    fps = current_fingerprints(q, o)
-    assert fps == current_fingerprints(q, o)
-    assert all(
-        isinstance(v, str) and len(v) == 16 for v in fps.values()
-    )
-    # collisions would hide a rewrite behind another entry's record
-    assert len(set(fps.values())) == len(fps)
-    name = "flagship_filter_project"
-    assert entry_fingerprint(q[name], o[name]) != entry_fingerprint(
-        q[name], o[name] + " -- edited"
-    )
-
-
-def test_every_fingerprint_record_is_green():
-    """GREEN_FINGERPRINTS records last-green source states; a record
-    for a pending entry would let it skip the changed tier on its
-    first promotion round."""
-    from warpdb_spark.inventory.fingerprints import GREEN_FINGERPRINTS
-
-    not_green = set(GREEN_FINGERPRINTS) - set(rotation.DRIVER_GREEN)
-    assert not not_green, f"fingerprints recorded for non-green entries: {not_green}"
-
-
-def test_changed_tier_orders_ahead_of_unchanged(monkeypatch):
-    """Synthetic pin of the tier rule: mark one recent-green entry
-    changed and it must outrank every unchanged green, while pending
-    entries still outrank it."""
-    q, _ = inventory.load_all()
-    names = list(q)
-    greens_by_round = sorted(
-        rotation.DRIVER_GREEN, key=lambda n: rotation.DRIVER_GREEN[n]
-    )
-    newest = greens_by_round[-1]
-    order = rotation.build_driver_priority(names, changed={newest})
-    tail = [n for n in order if n in rotation.DRIVER_GREEN]
-    assert tail[0] == newest
-    order_unchanged = rotation.build_driver_priority(names, changed=set())
-    assert order_unchanged.index(newest) > order.index(newest)
-
-
-def test_fingerprints_immune_to_construction_side_effects(spark, sf_dir):
-    """r9 isolated-run finding: private mutable module globals
-    (plans.builder._SQ_SEQ subquery counter,
-    curation_ext._JACCARD_EDGE_CACHE persist registry) leaked runtime
-    state into const-aware fingerprints — constructing any dialect
-    entry changed 41 entries' fingerprints mid-process, flapping the
-    changed-since-green tier. Constructing entries must leave every
-    fingerprint untouched."""
-    from warpdb_spark.inventory import fingerprint as FP
-
-    q, o = inventory.load_all()
-    probes = [
-        "dialect_tpch_q1",       # bumps the _SQ_SEQ counter
-        "graph_neighbor_jaccard",  # fills _JACCARD_EDGE_CACHE
-        "window_qualify",
-    ]
-    before = {n: FP.entry_fingerprint(q[n], o.get(n)) for n in probes}
-    try:
-        for n in probes:
-            q[n](spark, sf_dir)
-    finally:
-        spark.catalog.clearCache()
-    FP._SOURCE_CACHE.clear()
-    after = {n: FP.entry_fingerprint(q[n], o.get(n)) for n in probes}
-    assert after == before
-
-
-def test_private_upper_behavior_tables_are_hashed():
-    """r9 session-2 review finding: the first runtime-state fix
-    excluded ALL private mutable globals, silently un-hashing the
-    _UPPER behavior tables this codebase uses (_CMS_PROBES, stopword
-    sets, _FUNC_ALIASES) — an edit to one changed entry OUTPUTS
-    without floating the entry to the changed-since-green tier. The
-    gate now hashes UPPERCASE-named mutable data (public or private)
-    and excludes only the explicit RUNTIME_STATE registry."""
-    from warpdb_spark.inventory import fingerprint as FP
-
-    # registered runtime state: never hashed
-    assert not FP._is_static_const(
-        "warpdb_spark.plans.builder", "_SQ_SEQ", [0]
-    )
-    assert not FP._is_static_const(
-        "warpdb_spark.inventory.curation_ext", "_JACCARD_EDGE_CACHE", []
-    )
-    # private UPPER mutable table: hashed (the review's defect class)
-    assert FP._is_static_const("warpdb_spark.x", "_CMS_PROBES", ["the"])
-    assert FP._is_static_const("warpdb_spark.x", "_STOP", {"the"})
-    # lowercase mutable global: runtime state by convention
-    assert not FP._is_static_const("warpdb_spark.x", "_cache", {})
-    # immutable pure data: always
-    assert FP._is_static_const("warpdb_spark.x", "_k", 3)
-
-
-def test_behavior_table_edit_floats_the_entry():
-    """End-to-end: mutating a referenced _UPPER table must change the
-    entry's fingerprint (this is what makes the rotation re-check an
-    entry whose constants were edited)."""
-    from warpdb_spark.inventory import fingerprint as FP
-    from warpdb_spark.inventory import scale_ops
-
-    q, o = inventory.load_all()
-    name = "sketch_countmin_words"
-    before = FP.entry_fingerprint(q[name], o.get(name))
-    saved = scale_ops._CMS_PROBES
-    scale_ops._CMS_PROBES = list(saved) + ["__probe__"]
-    try:
-        FP._SOURCE_CACHE.clear()
-        after = FP.entry_fingerprint(q[name], o.get(name))
-    finally:
-        scale_ops._CMS_PROBES = saved
-        FP._SOURCE_CACHE.clear()
-    assert after != before
 
 
 def test_with_ties_plan_has_no_window_node(spark, sf_dir):
@@ -596,19 +329,3 @@ class TestCapabilityOverlap:
         assert res.returncode == 0, res.stdout + res.stderr
         assert "nearest existing capabilities" in res.stdout
 
-
-def test_fingerprint_sees_function_local_imports():
-    """r11 finding: entries importing operators INSIDE the function
-    body (``from warpdb_spark.operators import similarity as S``) bound
-    a local the globals walk never saw — their operator rewrites never
-    floated them into the changed-since-green tier (the IVFADC refactor
-    shipped invisible to the old metric). Pin that the walk now
-    resolves the dotted IMPORT_NAME from co_names and reaches the
-    operator's source, deterministically (before OR after the lazy
-    submodule import happens)."""
-    from warpdb_spark.inventory import fingerprint as FP
-    from warpdb_spark.inventory.analytics_ext import similarity_ivfpq
-
-    keys = {k for k, _ in FP._collect(similarity_ivfpq)}
-    assert ("warpdb_spark.operators.similarity", "ivfpq_topk") in keys
-    assert ("warpdb_spark.operators.similarity", "_ivfpq_index") in keys

@@ -429,130 +429,8 @@ class TestOrderedAggNullKeys:
         assert parts == nonnull + nulls
 
 
-class TestUpdateRotationParse:
-    """Round-4 self-review: split('PENDING_ORDER') matched the word in
-    the module docstring, so the tool parsed zero pending names and was
-    a silent no-op."""
-
-    def test_pending_names_parse_from_rotation_source(self):
-        import tools.update_rotation as ur
-        import re
-
-        src = ur.ROTATION.read_text()
-        block = src.split("PENDING_ORDER: list[str] = [", 1)[1].split("]", 1)[0]
-        names = re.findall(r'^    "([a-z0-9_]+)",$', block, re.M)
-        from warpdb_spark.inventory import rotation
-
-        assert names == rotation.PENDING_ORDER
-        # The original bug parsed ZERO names because split() matched the
-        # word in the docstring. The live list can legitimately be empty
-        # (right after a window promotion, e.g. the r12 start), so guard
-        # the parse mechanics with planted names instead of len(live)>0.
-        planted_src = src.replace(
-            "PENDING_ORDER: list[str] = [\n",
-            'PENDING_ORDER: list[str] = [\n    "zz_planted_a",\n    "zz_planted_b",\n',
-            1,
-        )
-        block = planted_src.split("PENDING_ORDER: list[str] = [", 1)[1].split("]", 1)[0]
-        planted = re.findall(r'^    "([a-z0-9_]+)",$', block, re.M)
-        assert planted[:2] == ["zz_planted_a", "zz_planted_b"]
-
-    def test_dry_run_reports_window_entries(self, tmp_path, monkeypatch, capsys):
-        """In-process with two PLANTED pending names (the live
-        PENDING_ORDER can legitimately be empty right after a window
-        promotion) — the dry run must count them newly green."""
-        import json
-        import tools.update_rotation as ur
-
-        moved = ["zz_synthetic_dry_0", "zz_synthetic_dry_1"]
-        planted = "".join(f'    "{n}",\n' for n in moved)
-        copy = tmp_path / "rotation.py"
-        copy.write_text(
-            ur.ROTATION.read_text().replace(
-                "PENDING_ORDER: list[str] = [\n",
-                "PENDING_ORDER: list[str] = [\n" + planted,
-                1,
-            )
-        )
-        monkeypatch.setattr(ur, "ROTATION", copy)
-        art = {
-            n: {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-            for n in moved
-        }
-        p = tmp_path / "CORRECTNESS_rX.json"
-        p.write_text(json.dumps(art))
-        monkeypatch.setattr("sys.argv", ["update_rotation.py", str(p), "9"])
-        assert ur.main() == 0
-        assert "newly green pending: 2" in capsys.readouterr().out
-
-    def test_write_roundtrip_moves_entries(self, tmp_path, monkeypatch):
-        import json
-        import re
-        import tools.update_rotation as ur
-
-        # work on a copy of the real file, with four SYNTHETIC pending
-        # names planted (the live PENDING_ORDER can legitimately hold
-        # fewer than 4 — e.g. r8 starts a round with 3 new entries —
-        # and this test is about the tool's file-rewrite mechanics,
-        # not the live bookkeeping)
-        moved = [f"zz_synthetic_pending_{i}" for i in range(4)]
-        planted = "".join(f'    "{n}",\n' for n in moved)
-        copy = tmp_path / "rotation.py"
-        copy.write_text(
-            ur.ROTATION.read_text().replace(
-                "PENDING_ORDER: list[str] = [\n",
-                "PENDING_ORDER: list[str] = [\n" + planted,
-                1,
-            )
-        )
-        monkeypatch.setattr(ur, "ROTATION", copy)
-        art = tmp_path / "c.json"
-        art.write_text(json.dumps({
-            moved[0]: {"rows_match": True, "schema_match": True, "hash_match": True, "err": None},
-            # a missing/None hash means the check never RAN — must NOT
-            # be promoted to DRIVER_GREEN (r4 ADVICE finding)
-            moved[1]: {"rows_match": True, "schema_match": True, "hash_match": None, "err": None},
-            moved[2]: {"rows_match": False, "schema_match": True, "hash_match": False,
-                        "err": "boom"},
-            # explicit hash-exempt sentinel DOES promote
-            moved[3]: {"rows_match": True, "schema_match": True,
-                        "hash_match": "skipped", "err": None},
-        }))
-        # the tool now validates fingerprints BEFORE any write (r9
-        # review fix); the synthetic names aren't real inventory
-        # entries, so stub that step — this test is about the
-        # rotation-file rewrite mechanics — and point the generated
-        # fingerprints file at a scratch copy
-        monkeypatch.setattr(ur, "merged_fingerprints", lambda names: ({}, 0))
-        fp_copy = tmp_path / "fingerprints.py"
-        monkeypatch.setattr(ur, "FINGERPRINTS", fp_copy)
-        monkeypatch.setattr("sys.argv", ["update_rotation.py", str(art), "4", "--write"])
-        assert ur.main() == 0
-        out = copy.read_text()
-        block = out.split("PENDING_ORDER: list[str] = [", 1)[1].split("]", 1)[0]
-        pending_after = re.findall(r'^    "([a-z0-9_]+)",$', block, re.M)
-        # explicit-green moves; hash-never-ran and red stay pending
-        assert moved[0] not in pending_after
-        assert moved[1] in pending_after
-        assert moved[2] in pending_after
-        assert moved[3] not in pending_after
-        assert f'"{moved[0]}": 4,' in out
-        assert f'"{moved[1]}": 4,' not in out
-        assert f'"{moved[3]}": 4,' in out
-
-
 class TestRound5AdviceFixes:
     """Regressions for the five r4 ADVICE findings."""
-
-    def test_fully_green_requires_explicit_hash_pass(self):
-        import tools.update_rotation as ur
-
-        base = {"rows_match": True, "schema_match": True, "err": None}
-        assert ur.fully_green({**base, "hash_match": True})
-        assert ur.fully_green({**base, "hash_match": "skipped"})
-        assert not ur.fully_green({**base, "hash_match": None})
-        assert not ur.fully_green(base)  # field absent entirely
-        assert not ur.fully_green({**base, "hash_match": False})
 
     def test_with_ties_survives_user_ties_rk_column(self, spark):
         rows = [Row(v=1, g=10), Row(v=2, g=10), Row(v=3, g=20), Row(v=4, g=20)]
@@ -605,40 +483,3 @@ class TestRound5AdviceFixes:
             list(cls().eval("a b c", 2.7))
         # integral-valued floats still accepted (2.0 == 2)
         assert list(cls().eval("a b c", 2.0)) == [(0, "a b"), (1, "b c")]
-
-
-class TestRound9RotationWriteOrdering:
-    def test_unknown_green_name_leaves_both_files_untouched(
-        self, tmp_path, monkeypatch
-    ):
-        """r9 review fix: a green window row that is not in the
-        inventory must abort BEFORE rotation.py or fingerprints.py is
-        written — the old ordering rewrote rotation.py first, leaving
-        the two generated files skewed."""
-        import json
-
-        import pytest as _pytest
-
-        import tools.update_rotation as ur
-
-        copy = tmp_path / "rotation.py"
-        copy.write_text(ur.ROTATION.read_text())
-        fp_copy = tmp_path / "fingerprints.py"
-        fp_copy.write_text("SENTINEL")
-        monkeypatch.setattr(ur, "ROTATION", copy)
-        monkeypatch.setattr(ur, "FINGERPRINTS", fp_copy)
-        before = copy.read_text()
-        art = tmp_path / "c.json"
-        art.write_text(json.dumps({
-            "no_such_inventory_entry": {
-                "rows_match": True, "schema_match": True,
-                "hash_match": True, "err": None,
-            },
-        }))
-        monkeypatch.setattr(
-            "sys.argv", ["update_rotation.py", str(art), "9", "--write"]
-        )
-        with _pytest.raises(SystemExit, match="not in inventory"):
-            ur.main()
-        assert copy.read_text() == before
-        assert fp_copy.read_text() == "SENTINEL"

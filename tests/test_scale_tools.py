@@ -135,68 +135,3 @@ class TestPartitionPruning:
         assert "isnotnull(lang" in plan or "(lang" in plan
         n_all = docs.filter("lang = 'en'").count()
         assert back.count() == n_all
-
-
-class TestBenchSubstitution:
-    """The noisy-run substitution must never hand one core count's
-    reading to a run at another core count (r12): the driver benches
-    at a lower $SPARK_GRAFT_CPUS to measure scaling, and a cross-core
-    substitution would fabricate the scaling curve."""
-
-    def _hist(self, tmp_path, monkeypatch, records):
-        import json as _json
-
-        import bench
-
-        monkeypatch.setattr(bench, "_REPO", str(tmp_path))
-        with open(tmp_path / "BENCH_HISTORY.jsonl", "w") as f:
-            for r in records:
-                f.write(_json.dumps(r) + "\n")
-        return bench
-
-    def _rec(self, value, cpus=None, quiet=True):
-        r = {
-            "quiet": quiet, "tree": "t1", "sf": 0.1, "value": value,
-            "queries": {"q_a": value / 2, "q_b": value / 2},
-        }
-        if cpus is not None:
-            r["cpus"] = cpus
-        return r
-
-    def test_same_cpus_matches_and_picks_median(self, tmp_path, monkeypatch):
-        bench = self._hist(
-            tmp_path, monkeypatch,
-            [self._rec(10.0, 32), self._rec(12.0, 32), self._rec(11.0, 32)],
-        )
-        got = bench._best_quiet_same_tree("t1", 0.1, ["q_a", "q_b"], 32)
-        assert got is not None and got["value"] == 11.0  # median, not min
-
-    def test_even_count_picks_upper_middle(self, tmp_path, monkeypatch):
-        """r12 verdict item 3: with an even number of banked quiet
-        records the lower-middle degenerates to the MIN at count 2 —
-        the flattering end. The pick must be the upper-middle, so the
-        substituted value is never below the median quiet reading."""
-        bench = self._hist(
-            tmp_path, monkeypatch,
-            [self._rec(8.8, 32), self._rec(9.4, 32)],
-        )
-        got = bench._best_quiet_same_tree("t1", 0.1, ["q_a", "q_b"], 32)
-        assert got is not None and got["value"] == 9.4
-        bench = self._hist(
-            tmp_path, monkeypatch,
-            [self._rec(v, 32) for v in (10.0, 12.0, 11.0, 13.0)],
-        )
-        got = bench._best_quiet_same_tree("t1", 0.1, ["q_a", "q_b"], 32)
-        assert got is not None and got["value"] == 12.0
-
-    def test_other_cpus_never_substitutes(self, tmp_path, monkeypatch):
-        bench = self._hist(tmp_path, monkeypatch, [self._rec(10.0, 32)])
-        assert bench._best_quiet_same_tree("t1", 0.1, ["q_a", "q_b"], 8) is None
-
-    def test_legacy_records_count_as_32(self, tmp_path, monkeypatch):
-        bench = self._hist(tmp_path, monkeypatch, [self._rec(10.0, cpus=None)])
-        assert (
-            bench._best_quiet_same_tree("t1", 0.1, ["q_a", "q_b"], 32)["value"]
-            == 10.0
-        )
-        assert bench._best_quiet_same_tree("t1", 0.1, ["q_a", "q_b"], 8) is None

@@ -16,6 +16,7 @@ from pyspark.sql.types import (
 )
 
 from warpdb_spark.api import WarpDB
+from warpdb_spark.errors import ValidationError
 from warpdb_spark.sources.readers import load_table, read_arrow
 from warpdb_spark.sources.writers import write_table
 
@@ -211,6 +212,21 @@ class TestQueryStream:
             r.result for r in spark.sql("SELECT * FROM qstream_test").collect()
         )
         assert vals == pytest.approx([31.5, 80.0, 150.0])
+
+    def test_unknown_column_raises_like_query(self, spark, tmp_path_factory):
+        d = tmp_path_factory.mktemp("stream_bad")
+        (d / "a.csv").write_text("price,quantity\n10.5,3\n")
+        schema = StructType(
+            [StructField("price", DoubleType()), StructField("quantity", DoubleType())]
+        )
+        db = WarpDB(str(d / "a.csv"), spark=spark)
+        for expr in ("foo + 1", "price WHERE foo > 1"):
+            with pytest.raises(ValidationError) as batch:
+                db.query(expr)
+            with pytest.raises(ValidationError) as stream:
+                db.query_stream(expr, str(d), schema)
+            assert str(stream.value) == str(batch.value)
+            assert "Unknown column: foo" in str(stream.value)
 
 
 class TestCLI:

@@ -1,13 +1,11 @@
 """Inventory-wide audit: window (per-group sort) partitioned by a
 bounded-domain key.
 
-The headline contract test (tests/test_inventory_contract.py::
-test_headline_has_no_window_sort_on_low_cardinality_key) fail-closes
-the FROZEN 15-query bench suite against this scale-killer; this tool
-sweeps the OPTIMIZED plan of every inventory entry (265 at round 8) so
-the next one cannot be added silently anywhere in the inventory — the
-companion contract test pins the audit's findings to the known
-exceptions list below.
+This tool sweeps the OPTIMIZED plan of every inventory entry so a
+scale-killer window cannot be added silently anywhere in the
+inventory — the contract test (tests/test_inventory_contract.py::
+test_inventory_window_audit_matches_reviewed_exceptions) pins the
+audit's findings to the known exceptions list below.
 
 Why it matters at 100 TB: a window partitioned by a key whose domain
 does not grow with the data (lang, returnflag, segment — distinct

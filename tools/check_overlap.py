@@ -3,11 +3,9 @@
 Usage: python tools/check_overlap.py [entry ...]
 
 With names: prints each named entry's top-5 IDF-nearest existing
-oracles — the pre-commit review the round rhythm requires for every
-NEW entry (the r10 duplicates both ranked their true twin in the
-top 2; read the report, then decide). Without names: defaults to the
-entries still pending their first driver check (rotation.PENDING_ORDER
-minus DRIVER_GREEN).
+oracles — the pre-commit review for every NEW entry (the r10
+duplicates both ranked their true twin in the top 2; read the report,
+then decide). Without names: runs only the sweep below.
 
 Always sweeps the strong-signal tier: exits 1 if any pair at
 >= TWIN_THRESH is missing from the reviewed ALLOWED_TWINS list (the
@@ -24,16 +22,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> int:
     from warpdb_spark import inventory
-    from warpdb_spark.inventory import rotation
     from warpdb_spark.inventory.overlap import ALLOWED_TWINS, OverlapIndex
 
     _, oracles = inventory.load_all()
     idx = OverlapIndex(oracles)
 
-    names = sys.argv[1:]
-    if not names:
-        names = [n for n in rotation.PENDING_ORDER if n not in rotation.DRIVER_GREEN]
-    for name in names:
+    for name in sys.argv[1:]:
         if name not in idx.toks:
             print(f"{name}: not in the inventory (no oracle SQL)")
             continue

@@ -262,7 +262,7 @@ def main():
         ("weighted_median", naive_weighted_median, agg_weighted_median),
         ("distribution_fns", naive_distribution, window_distribution_functions),
     ]
-    # min-of-2 interleaved (bench.py discipline)
+    # min-of-2 interleaved: one noisy run cannot pick the winner
     best = {}
     for p in range(2):
         for name, naive, chunked in pairs:

@@ -170,21 +170,26 @@ class WarpDB:
         return self
 
     # -- query entry points ---------------------------------------------
+    def _compile_mini(self, df: DataFrame, expr: str):
+        """The mini-language path shared by ``query`` and
+        ``query_stream``: split on WHERE, parse, validate against
+        ``df``'s columns, compile. Returns ``(filtered df, expression)``."""
+        parts = _WHERE_SPLIT.split(expr, maxsplit=1)
+        expr_ast = parse_expression(parts[0].strip())
+        cols = set(df.columns)
+        validate(expr_ast, cols, "SELECT")
+        if len(parts) > 1:
+            cond_ast = parse_expression(parts[1].strip())
+            validate(cond_ast, cols, "WHERE")
+            df = df.filter(Compiler(self.registry).compile(cond_ast))
+        return df, Compiler(self.registry).compile(expr_ast)
+
     def query(self, expr: str, coerce_float32: bool = False) -> DataFrame:
         """``"<expr> [WHERE <cond>]"`` mini-language
         (include/warpdb.hpp:17-19, src/warpdb.cpp:199-257). Returns a
         single-column DataFrame named ``result`` (the reference returns
         ``vector<float>``)."""
-        parts = _WHERE_SPLIT.split(expr, maxsplit=1)
-        expr_ast = parse_expression(parts[0].strip())
-        cols = set(self.df.columns)
-        validate(expr_ast, cols, "SELECT")
-        df = self.df
-        if len(parts) > 1:
-            cond_ast = parse_expression(parts[1].strip())
-            validate(cond_ast, cols, "WHERE")
-            df = df.filter(Compiler(self.registry).compile(cond_ast))
-        out = Compiler(self.registry).compile(expr_ast)
+        df, out = self._compile_mini(self.df, expr)
         if coerce_float32:
             out = out.cast("float")
         return df.select(out.alias("result"))
@@ -344,15 +349,8 @@ class WarpDB:
             stream = reader.option("maxFilesPerTrigger", max_files_per_trigger).parquet(path)
         else:
             raise ValueError(f"Unsupported stream format: {fmt}")
-        parts = _WHERE_SPLIT.split(expr, maxsplit=1)
-        expr_ast = parse_expression(parts[0].strip())
-        cols = set(stream.columns)
-        validate(expr_ast, cols, "SELECT")
-        if len(parts) > 1:
-            cond_ast = parse_expression(parts[1].strip())
-            validate(cond_ast, cols, "WHERE")
-            stream = stream.filter(Compiler(self.registry).compile(cond_ast))
-        return stream.select(Compiler(self.registry).compile(expr_ast).alias("result"))
+        stream, out = self._compile_mini(stream, expr)
+        return stream.select(out.alias("result"))
 
     @classmethod
     def query_csv(

@@ -1,50 +1,17 @@
-"""Driver-facing query inventory.
+"""Query inventory.
 
 Each submodule exposes ``QUERIES: dict[str, Callable[[SparkSession, str],
 DataFrame]]`` and ``ORACLES: dict[str, str]`` (ANSI SQL for DuckDB).
 ``__spark_entry__.py`` aggregates them. Naming convention: the prefix
 states the SURVEY §2 operator family the entry covers.
 
-Entry ORDER matters: the driver's per-round correctness gate verifies a
-bounded window from the front of the ``queries()`` dict (~50 entries per
-round). The order is generated mechanically from
-``warpdb_spark.inventory.rotation``: every entry still awaiting its
-first driver-green row (``rotation.PENDING_ORDER``, risk-ranked —
-dialect executors and replay-oracle entries first) is emitted before
-every entry that already has one (``rotation.DRIVER_GREEN``), so each
-round's window verifies ~50 never-checked names. The authoritative
-counts live in rotation.py itself (len(PENDING_ORDER) pending —
-the round-3 verdict's 94-entry backlog plus this round's additions —
-and len(DRIVER_GREEN) prior greens); everything stays guarded by the
-local oracle gate (tools/check_oracle.py) + pytest either way.
+``load_all()`` merges the submodules in a fixed module order. Names are
+unique across the inventory: a name defined twice, or an oracle without
+a query, is an error rather than a silent shadow. Every entry is
+guarded by the local oracle gate (tools/check_oracle.py) and pytest.
 """
 
 from __future__ import annotations
-
-from warpdb_spark.inventory.rotation import (  # noqa: F401 (re-exported)
-    DRIVER_GREEN,
-    PENDING_ORDER,
-    build_driver_priority,
-)
-
-# Full emission order for the driver window: pending-first, then
-# changed-since-green, then unchanged greens; validated against the
-# loaded inventory inside load_all(). Kept as a module attribute so
-# tests can monkeypatch it.
-DRIVER_PRIORITY: list[str] = []
-
-
-def _refresh_driver_priority(names: list[str], changed_thunk) -> list[str]:
-    """(Re)build DRIVER_PRIORITY from the rotation bookkeeping. Called
-    by load_all() with the merged inventory; respects a monkeypatched
-    non-empty DRIVER_PRIORITY (the contract tests inject bad names to
-    assert loud failure). ``changed_thunk`` is only invoked on the
-    first build — the fingerprint walk over all entries is pure waste
-    on later load_all() calls whose result is discarded (r9 review)."""
-    global DRIVER_PRIORITY
-    if not DRIVER_PRIORITY:
-        DRIVER_PRIORITY = build_driver_priority(names, changed_thunk())
-    return DRIVER_PRIORITY
 
 
 def load_all():
@@ -58,25 +25,22 @@ def load_all():
         tpch_extra,
     )
 
-    merged_q: dict = {}
-    merged_o: dict = {}
+    queries: dict = {}
+    oracles: dict = {}
+    owner: dict[str, str] = {}
     for m in (core_sql, tpch_extra, pipeline_ops, analytics_ext, retrieval_ops,
               scale_ops, curation_ext):
-        merged_q.update(m.QUERIES)
-        merged_o.update(m.ORACLES)
-
-    from warpdb_spark.inventory.fingerprint import changed_since_green
-    from warpdb_spark.inventory.fingerprints import GREEN_FINGERPRINTS
-
-    priority = _refresh_driver_priority(
-        list(merged_q),
-        lambda: changed_since_green(merged_q, merged_o, GREEN_FINGERPRINTS),
-    )
-    missing = [n for n in priority if n not in merged_q]
-    if missing:
-        raise RuntimeError(f"DRIVER_PRIORITY names not in inventory: {missing}")
-
-    queries: dict = {n: merged_q[n] for n in priority}
-    queries.update((n, q) for n, q in merged_q.items() if n not in queries)
-    oracles: dict = {n: merged_o[n] for n in queries if n in merged_o}
+        mod = m.__name__.rsplit(".", 1)[-1]
+        clash = sorted(n for n in m.QUERIES if n in queries)
+        if clash:
+            raise RuntimeError(
+                "inventory names defined twice: "
+                + ", ".join(f"{n} ({owner[n]}, {mod})" for n in clash)
+            )
+        orphans = sorted(set(m.ORACLES) - set(m.QUERIES))
+        if orphans:
+            raise RuntimeError(f"oracles without a query in {mod}: {orphans}")
+        queries.update(m.QUERIES)
+        oracles.update(m.ORACLES)
+        owner.update(dict.fromkeys(m.QUERIES, mod))
     return queries, oracles

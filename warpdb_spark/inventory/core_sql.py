@@ -610,7 +610,7 @@ def udaf_group_median_chunked(spark, sf_dir):
     )
 
 
-# --- TPC-H-shaped headline queries (bench set) ------------------------------
+# --- TPC-H-shaped headline queries ------------------------------------------
 
 def tpch_q1_pricing_summary(spark, sf_dir):
     """Q1: scan-heavy multi-agg — partial aggregation does the work

@@ -355,8 +355,7 @@ def reshape_train_val_split(spark, sf_dir):
 def _hash_split_expr(key) -> "F.Column":
     """95/4/1 split label from a deterministic md5-hex-prefix uniform
     of ``key`` — the same math ``reshape_train_val_split`` inlines
-    (stable across runs, partitions, and engines; left un-refactored
-    there to keep that entry's fingerprint unchanged)."""
+    (stable across runs, partitions, and engines)."""
     u = F.conv(F.substring(F.md5(key.cast("string")), 1, 8), 16, 10).cast(
         "double"
     ) / F.lit(float(16**8))

@@ -10,13 +10,24 @@ Scale design, per operator:
   row_number window here was the r7 contract-test finding). Keys are
   md5 of normalized text, so wide text values never ride the shuffle
   twice.
-- **MinHash signatures**: computed entirely with higher-order functions
-  (shingle → per-seed xxhash64 → array_min), i.e. a codegen'd map stage;
-  NO explode and NO shuffle to build signatures.
-- **LSH banding**: signatures explode to (band, band_hash) keys — the
-  only shuffle — then a self-join on the band key yields candidate
-  pairs; exact n-gram Jaccard verifies candidates. Band-hash hot spots
-  (boilerplate docs) are bounded by ``max_bucket_size``.
+- **MinHash signatures** have two spellings, with different hashes:
+  - ``minhash_signature`` (a per-row Column) uses higher-order
+    functions only (shingle → per-seed xxhash64 of the shingle string
+    → array_min): a map stage with no explode and no shuffle.
+  - the LSH path (``_pairs_from_shingles``, behind
+    ``lsh_candidate_pairs``, ``lsh_verified_pairs`` and
+    ``minhash_dedup``) explodes each document's distinct shingles,
+    hashes each shingle once, rehashes that long per seed, and takes
+    the per-seed minima in a groupBy on the doc id: one shuffle of
+    ``num_hashes`` longs per doc after map-side partial aggregation.
+    It runs in whole-stage codegen, where nested-HOF MinHash evaluates
+    interpreted.
+- **LSH banding**: signatures explode to (band, bucket) keys; one
+  (band, bucket) exchange carries both the bucket-size cap (a window
+  count) and the collect of each bucket's ids, whose i<j combinations
+  are the candidate pairs; exact n-gram Jaccard verifies candidates.
+  Band-hash hot spots (boilerplate docs) are bounded by
+  ``max_bucket_size``.
 - **SimHash**: 64-bit signature via an Arrow-batched pandas UDF (bit
   voting needs per-token popcount loops that HOFs express poorly);
   near-dup candidates via 4×16-bit chunk banding (Hamming ≤ 3 ⇒ some

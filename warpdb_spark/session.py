@@ -4,9 +4,9 @@ The reference manages execution resources by hand (cudaMalloc per query,
 128-thread blocks — src/jit.cpp:89-170). On Spark the equivalents are
 session-level configs: AQE for runtime re-planning, Arrow for any
 Python-side exchange, parquet pushdown for scan pruning. Everything here
-is sized so the same code runs on ``local[32]`` for tests and on a
-multi-executor cluster for 100 TB inputs (no config below pins local
-mode semantics).
+is sized so the same code runs on ``local[$SPARK_GRAFT_CPUS]`` (all host
+cores when unset) for tests and on a multi-executor cluster for 100 TB
+inputs (no config below pins local mode semantics).
 """
 
 from __future__ import annotations
